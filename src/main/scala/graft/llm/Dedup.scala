@@ -56,13 +56,8 @@ object Dedup {
     val reps = docFp(s, dir)
       .groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
-    // fused native shingler when GraftExtensions is installed; the
-    // composable HOF chain otherwise (identical output, oracle-checked)
-    val shingleExpr =
-      if (s.catalog.functionExists("shingles3")) "shingles3(text)"
-      else sLet(sTokens, "tk", sShingles)
     base.join(reps, "doc_id")
-      .selectExpr("doc_id", s"$shingleExpr as shs")
+      .selectExpr("doc_id", "shingles3(text) as shs")
       .filter("size(shs) > 0")
   }
 
@@ -88,9 +83,9 @@ object Dedup {
 
   /** x61's body, with the path made explicit so the spec can run both
     * forms on one session and assert equality: `native` uses the
-    * BloomBitsAgg bitset + codegen'd probe; the fallback is the
-    * positions-subset semi-join (the bloom's defining equivalence, and
-    * the oracle's shape). */
+    * BloomBitsAgg bitset + codegen'd probe (what x61 runs); the
+    * reference form is the positions-subset semi-join (the bloom's
+    * defining equivalence, and the oracle's shape). */
   private[graft] def bloomDecontam(
       s: SparkSession, dir: String, native: Boolean): DataFrame = {
     val m = BloomM; val k = BloomK
@@ -110,9 +105,9 @@ object Dedup {
           .filter("hit")
           .groupBy("doc_id").agg(count(lit(1)).as("n_flagged"))
       } else {
-        // composable fallback (no extension): count how many of the k
-        // derived positions each train gram finds among the distinct
-        // test-set positions — `all k set` ≡ bloom membership
+        // reference form: count how many of the k derived positions
+        // each train gram finds among the distinct test-set positions
+        // — `all k set` ≡ bloom membership
         val tpos = grams.filter("bucket >= 90")
           .selectExpr("explode(gs) as g").distinct()
           .selectExpr(s"${sH("g")} as h")
@@ -165,32 +160,17 @@ object Dedup {
   private def dBandHash(b: Int) =
     dH(s"concat_ws(',', m${4 * b}, m${4 * b + 1}, m${4 * b + 2}, m${4 * b + 3})")
 
-  /** Spark minhash signature frame: doc_id, m0..m15. One md5 per
-    * exploded shingle, then 16 rotate-xor `min` aggregates in a single
-    * codegen'd aggregation (map-side partial agg, one shuffle on
-    * doc_id) — no interpreted higher-order functions in the hot path,
-    * and per-element cost independent of document size. */
+  /** Spark minhash signature frame: doc_id, m0..m15. The fused native
+    * minhash16: one md5 per shingle, 16 rotate-xor minima in registers,
+    * no shuffle. The persist boundary stops projection collapse from
+    * inlining (and so re-evaluating) minhash16 into all 16 columns;
+    * shared because x06, x07 and x35 all consume the signatures. */
   private def signatures(s: SparkSession, dir: String): DataFrame =
-    if (s.catalog.functionExists("minhash16")) {
-      // fused native form: one md5 per shingle, 16 minima in registers,
-      // no shuffle. The persist boundary stops projection collapse from
-      // inlining (and so re-evaluating) minhash16 into all 16 columns;
-      // shared because x06, x07 and x35 all consume the signatures.
-      Durable.tier(s, dir, "minhash_ms", "v1-s16") {
-        shingled(s, dir).selectExpr("doc_id", "minhash16(shs) as ms")
-      }
-        .selectExpr("doc_id" +:
-          (0 until Seeds).map(i => s"element_at(ms, ${i + 1}) as m$i"): _*)
-    } else {
-      // composable fallback: explode + 16 codegen'd min aggregates
-      val minima = (0 until Seeds).map(i =>
-        expr(s"min(${sDerive("h", i)})").as(s"m$i"))
-      shingled(s, dir)
-        .selectExpr("doc_id", "explode(shs) as sh")
-        .selectExpr("doc_id", s"${sH("sh")} as h")
-        .groupBy("doc_id")
-        .agg(minima.head, minima.tail: _*)
+    Durable.tier(s, dir, "minhash_ms", "v1-s16") {
+      shingled(s, dir).selectExpr("doc_id", "minhash16(shs) as ms")
     }
+      .selectExpr("doc_id" +:
+        (0 until Seeds).map(i => s"element_at(ms, ${i + 1}) as m$i"): _*)
 
   /** DURABLE (shingle → stats) tier over the RAW corpus: per distinct
     * 3-word shingle, its document frequency, first-seer doc (min
@@ -231,7 +211,7 @@ object Dedup {
     Durable.tier(s, dir, "shingle_df", "v1-w3-ws-lower") {
       t(s, dir, "documents")
         .repartition(s.sparkContext.defaultParallelism)
-        .selectExpr("doc_id", "source", s"${sShinglesText(s)} as shs")
+        .selectExpr("doc_id", "source", s"$sShinglesText as shs")
         .selectExpr("doc_id", "source", "explode(shs) as sh")
         .groupBy("sh")
         .agg(count(lit(1)).as("df"),
@@ -287,35 +267,13 @@ object Dedup {
        |                   JOIN fs2 b ON p.doc_b = b.doc_id),
        |fs3 AS (SELECT * FROM fs2 WHERE doc_id NOT IN (SELECT doc_id FROM drp))""".stripMargin
 
-  /** Spark simhash over shingles: explode the shingle hashes and take a
-    * per-bit majority vote as 60 codegen'd conditional sums in ONE
-    * aggregation (map-side partial agg, one shuffle on doc_id), then
-    * assemble the 60-bit word in a single projection. This is the
-    * shape that scales: no per-row megaloop, so a document with 10^6
-    * shingles costs the same per-element work as a small one. */
+  /** Spark simhash over shingles: the fused native simhash60 (per-bit
+    * majority vote over the shingle hashes) as a narrow map — no
+    * shuffle until the chunk join. */
   private def simhashed(s: SparkSession, dir: String): DataFrame =
-      Durable.tier(s, dir, "simhashed", "v1-b60") {
-    if (s.catalog.functionExists("simhash60"))
-      // fused native form: narrow map, no shuffle until the chunk join
-      shingled(s, dir)
-        .selectExpr("doc_id", "simhash60(shs) as simhash")
-    else {
-      // composable fallback: explode + 60 per-bit majority sums in one
-      // codegen'd aggregation (map-side partial agg, shuffle on doc_id)
-      val bitSums = (0 until 60).map(b =>
-        expr(s"sum(cast((shiftright(h, $b) & 1) as bigint))").as(s"c$b"))
-      val word = (0 until 60).map(b =>
-        s"if(2 * c$b > n, shiftleft(cast(1 as bigint), $b), cast(0 as bigint))")
-        .mkString(" + ")
-      shingled(s, dir)
-        .selectExpr("doc_id", "explode(shs) as sh")
-        .selectExpr("doc_id", s"${sH("sh")} as h")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n"), bitSums: _*)
-        .selectExpr("doc_id", s"$word as simhash")
-        // (cached by Shared.shared: hamming self-join sides + x08/x09/x24/x32)
+    Durable.tier(s, dir, "simhashed", "v1-b60") {
+      shingled(s, dir).selectExpr("doc_id", "simhash60(shs) as simhash")
     }
-  }
 
   /** x09's pair graph: simhash reps whose hamming distance ≤ 3, found
     * via the 4 × 15-bit pigeonhole chunk index (exact recall for the
@@ -586,7 +544,7 @@ object Dedup {
     // grows with the benchmark suite (a few GB broadcast once), never
     // with the corpus.
     "x61_bloom_decontam" -> { (s, dir) =>
-      bloomDecontam(s, dir, native = s.catalog.functionExists("bloom_bits"))
+      bloomDecontam(s, dir, native = true)
     },
 
     // NEAR-DUP CROSS-SPLIT DECONTAMINATION — x21/x61 catch verbatim
@@ -794,7 +752,7 @@ object Dedup {
       val trainEx = grams.filter("bucket < 90")
         .selectExpr("doc_id", "explode(gs) as g")
       val gated =
-        if (!fits && s.catalog.functionExists("bloom_bits")) {
+        if (!fits) {
           val m = gateBits(nEval)
           val bloom = bench.selectExpr(s"${sH("g")} as h")
             .agg(expr(s"bloom_bits(h, $m, $BloomK)").as("bloom"))
@@ -1086,15 +1044,10 @@ object Dedup {
     // doc_id — never a global sort); output is one row per contaminated
     // train doc, bounded by the contamination, not the corpus.
     "x119_contamination_span" -> { (s, dir) =>
-      contaminationSpan(s, dir,
-        native = s.catalog.functionExists("bloom_bits"))
+      contaminationSpan(s, dir, native = true)
     },
   )
 
-  /** x119's body with the bloom-gate path explicit so the spec can run
-    * both forms on one session and assert bit-identity: the Bloom
-    * prefilter admits false positives, the exact semi-join removes
-    * them, so `native` may only change the plan, never the rows. */
   /** Bits for a results-INVISIBLE bloom gate (x119/x109 — an exact
     * semi-join confirms downstream, so m affects bytes-through-the-
     * exchange, never results): ~16 bits per inserted key at k=3 is
@@ -1121,8 +1074,22 @@ object Dedup {
     * MB of broadcast hash relation — sized for the bench's 8 GB driver;
     * env-tunable for bigger drivers. */
   private[graft] val GateBroadcastKeys: Long =
-    sys.env.get("GRAFT_GATE_BROADCAST_KEYS").map(_.toLong).getOrElse(1L << 21)
+    gateBroadcastKeys(sys.env.get("GRAFT_GATE_BROADCAST_KEYS"))
 
+  /** Parses `GRAFT_GATE_BROADCAST_KEYS` (default 2^21): a non-numeric or
+    * negative value is an IllegalArgumentException naming the variable,
+    * not an initializer error on first touch of Dedup. */
+  private[graft] def gateBroadcastKeys(raw: Option[String]): Long =
+    raw.fold(1L << 21) { v =>
+      v.trim.toLongOption.filter(_ >= 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"GRAFT_GATE_BROADCAST_KEYS must be a non-negative integer, got '$v'"))
+    }
+
+  /** x119's body with the bloom-gate path explicit so the spec can run
+    * both forms on one session and assert bit-identity: the Bloom
+    * prefilter admits false positives, the exact semi-join removes
+    * them, so `native` may only change the plan, never the rows. */
   private[graft] def contaminationSpan(
       s: SparkSession, dir: String, native: Boolean,
       broadcastKeys: Long = GateBroadcastKeys): DataFrame = {

@@ -43,11 +43,12 @@ object Frag {
       |  i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))""".stripMargin
 
   /** The shingle projection over a `text` column: the fused native
-    * kernel (plans.Shingles3) when GraftExtensions is installed, the
-    * composable HOF twin otherwise (identical output, oracle-checked).
-    * Shared by the equality-only shingle consumers (x48/x57/x64).
+    * kernel (plans.Shingles3), equal to the composable HOF chain
+    * `sLet(sTokens, "tk", sShingles)` (pinned by CosineF32Spec and
+    * Round20Spec). Shared by the equality-only shingle consumers
+    * (x48/x57/x64).
     *
-    * DECISION RECORD (round 14, graft.ShingleProbe at the 100× decade,
+    * DECISION RECORD (round 14, SCALE.md, at the 100× decade,
     * interleaved A/B ×3): keys cross these exchanges as RAW STRINGS,
     * not 60-bit hashes. Hashing-at-generation was measured and
     * REJECTED — x64 19.3 s (fused strings) vs 26.0 s (fused hashes),
@@ -56,9 +57,7 @@ object Frag {
     * before it ships, so the md5 per instance is pure added CPU with
     * nothing left to save. The fused STRING shingler is the part that
     * pays (22.4 s HOF → 19.3 s fused on x64). */
-  def sShinglesText(s: org.apache.spark.sql.SparkSession): String =
-    if (s.catalog.functionExists("shingles3")) "shingles3(text)"
-    else sLet(sTokens, "tk", sShingles)
+  val sShinglesText: String = "shingles3(text)"
 
   /** SQL let-binding: evaluate `bind` ONCE per row and reference it as
     * lambda variable `v` in `body`. Catalyst's CollapseProject inlines

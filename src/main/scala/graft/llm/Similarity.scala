@@ -106,15 +106,9 @@ object Similarity {
         .selectExpr("vec_id", "embedding", s"${sSumSq("embedding")} as sq")
     }
 
-  /** Exact cosine between two (embedding, sq) sides, 6-dp bit-exact.
-    * Uses the native codegen'd CosineF32 when graft.plans
-    * .GraftExtensions is installed (identical IEEE fold order), else
-    * the interpreted HOF form. */
-  private def sCosIn(s: SparkSession): String =
-    if (s.catalog.functionExists("cosine_f32"))
-      sRound6("cosine_f32(ea, eb)")
-    else
-      sRound6(s"${sDot("ea", "eb")} / sqrt(sa * sb)")
+  /** Exact cosine between two (embedding, sq) sides, 6-dp bit-exact:
+    * the native codegen'd CosineF32 (the HOF fold's IEEE order). */
+  private val sCosIn: String = sRound6("cosine_f32(ea, eb)")
 
   /** Per-label centroid vectors (clabel, cv: array<double>, csq): exact
     * decimal means per dim, assembled in dim order — identical values
@@ -160,11 +154,8 @@ object Similarity {
   private[graft] def ivfTop2(s: SparkSession, dir: String): DataFrame =
     Durable.tier(s, dir, "ivf_top2", "v1-r4") {
       val cent = centroids(s, dir)
-      val dotExpr =
-        if (s.catalog.functionExists("dot_f32f64")) "dot_f32f64(embedding, cv)"
-        else "aggregate(zip_with(embedding, cv, (x, w) -> cast(x as double) * w), cast(0 as double), (acc, t) -> acc + t)"
       withSq(s, dir).crossJoin(broadcast(cent))
-        .selectExpr("vec_id", "clabel", s"$dotExpr / sqrt(sq * csq) as cosc")
+        .selectExpr("vec_id", "clabel", "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
         .groupBy("vec_id")
         .agg(expr("slice(transform(sort_array(collect_list(struct(-cosc as nc, clabel))), x -> x.clabel), 1, 4)").as("cl4"))
         .selectExpr("vec_id", "cl4", "slice(cl4, 1, 2) as cl2")
@@ -179,30 +170,17 @@ object Similarity {
     Durable.tier(s, dir, "pq_codes", "v1-ss8") {
       t(s, dir, "embeddings")
         .crossJoin(broadcast(pqCodebook(s, dir)))
-        .selectExpr("vec_id", "ss", "clabel", s"${sSubDist(s)} as d2")
+        .selectExpr("vec_id", "ss", "clabel", s"$sSubDist as d2")
         .groupBy("vec_id", "ss")
         .agg(expr("min(struct(d2, clabel))").as("m"))
         .selectExpr("vec_id", "ss", "m.clabel as code", "m.d2 as d2")
     }
 
   /** Squared L2 between the `ss`-th 8-dim slice of a float vector and a
-    * double codeword array — fused L2F32F64 when installed, HOF
-    * fallback with the identical sequential fold (the oracle's 8-term
-    * chain either way). */
-  private def sSubDist(s: SparkSession): String =
-    sL2In(s, "slice(embedding, ss * 8 + 1, 8)", "cw")
-
-  /** Squared L2 between a float vector (expression `vecE`) and a double
-    * centroid array — the fused codegen'd L2F32F64 when the extension
-    * is installed (the vectors × centroids product is THE hot loop of
-    * k-means/PQ; measured 144 s → linear at the 10× corpus), else the
-    * interpreted HOF with the identical left-to-right IEEE fold. */
-  private def sL2In(s: SparkSession, vecE: String, cvCol: String): String =
-    if (s.catalog.functionExists("l2_f32f64")) s"l2_f32f64($vecE, $cvCol)"
-    else
-      s"""aggregate(zip_with($vecE, $cvCol,
-         |  (x, c) -> (cast(x as double) - c) * (cast(x as double) - c)),
-         |  cast(0 as double), (acc, t) -> acc + t)""".stripMargin
+    * double codeword array — the fused codegen'd L2F32F64 (the oracle's
+    * 8-term sequential fold; the vectors × centroids product is THE hot
+    * loop of k-means/PQ, measured 144 s → linear at the 10× corpus). */
+  private val sSubDist = "l2_f32f64(slice(embedding, ss * 8 + 1, 8), cw)"
 
   /** Converged (2-iteration) Lloyd centroids from the deterministic
     * 8-seed init — shared tier: x51's inertia report and x111's
@@ -235,8 +213,7 @@ object Similarity {
     * collapsed immediately by a map-side min-struct aggregation. */
   private def kmAssign(emb: DataFrame, cent: DataFrame): DataFrame =
     emb.crossJoin(broadcast(cent))
-      .selectExpr("vec_id", "cl",
-        s"${sL2In(emb.sparkSession, "embedding", "cv")} as d2")
+      .selectExpr("vec_id", "cl", "l2_f32f64(embedding, cv) as d2")
       .groupBy("vec_id")
       .agg(expr("min(struct(d2, cl))").as("m"))
       .selectExpr("vec_id", "m.cl as cl", "m.d2 as d2")
@@ -252,23 +229,13 @@ object Similarity {
       .groupBy("cl")
       .agg(expr("transform(sort_array(collect_list(struct(dim, c))), x -> x.c)").as("cv"))
 
-  private def bandsExpr =
-    s"array(${(0 until 4).map(b => sBand("embedding", b)).mkString(", ")})"
-
-  /** Band-values expression: fused native SignBandsF32 when the
-    * extension is installed (one vector pass for all 16 planes), else
-    * the 16-fold HOF form — identical values either way. */
-  private def bandsIn(s: SparkSession): String =
-    if (s.catalog.functionExists("sign_bands_f32")) "sign_bands_f32(embedding)"
-    else bandsExpr
-
   /** Spark frame: vec_id, embedding, sq, bi, bv (4 rows per vector).
     * Persisted: the 16 projection folds are worth computing once, and
     * both sides of the candidate self-join read this frame. */
   private def withBands(s: SparkSession, dir: String): DataFrame =
     Shared.shared(s, dir, "withBands") {
       withSq(s, dir)
-        .selectExpr("vec_id", "embedding", "sq", s"posexplode(${bandsIn(s)}) as (bi, bv)")
+        .selectExpr("vec_id", "embedding", "sq", "posexplode(sign_bands_f32(embedding)) as (bi, bv)")
     }
 
   /** DuckDB CTEs: sq per vec + 4-band signature rows. */
@@ -315,7 +282,7 @@ object Similarity {
           col("sq").as("sb"))
       val scored = cands.crossJoin(broadcast(probes))
         .filter(col("query_id") =!= col("neighbor_id"))
-        .selectExpr("query_id", "neighbor_id", s"${sCosIn(s)} as cos_sim")
+        .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
       graft.plans.TopKPerKey.topKDesc(scored, Seq("query_id"), "cos_sim",
         Seq("neighbor_id"), TopK)
     }
@@ -342,7 +309,7 @@ object Similarity {
         col("embedding").as("ea"), col("sq").as("sa"))), "query_id")
       .join(sq.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("eb"), col("sq").as("sb")), "neighbor_id")
-      .selectExpr("query_id", "neighbor_id", s"${sCosIn(s)} as cos_sim")
+      .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
     graft.plans.TopKPerKey.topKDesc(scored2, Seq("query_id"), "cos_sim",
       Seq("neighbor_id"), TopK)
   }
@@ -364,7 +331,7 @@ object Similarity {
         col("embedding").as("ea"), col("sq").as("sa"))), "query_id")
       .join(sq.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("eb"), col("sq").as("sb")), "neighbor_id")
-      .selectExpr("query_id", "neighbor_id", s"${sCosIn(s)} as cos_sim")
+      .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
     graft.plans.TopKPerKey.topKDesc(scored, Seq("query_id"), "cos_sim",
       Seq("neighbor_id"), TopK)
   }
@@ -381,7 +348,7 @@ object Similarity {
     val pdist = t(s, dir, "embeddings").filter(QuerySet)
       .crossJoin(broadcast(cb))
       .selectExpr("vec_id as query_id", "ss as pss", "clabel as pcl",
-        s"${sSubDist(s)} as pd2")
+        s"$sSubDist as pd2")
     val adc = codes
       .join(broadcast(pdist), col("ss") === col("pss") &&
         col("code") === col("pcl") && col("vec_id") =!= col("query_id"))
@@ -417,7 +384,7 @@ object Similarity {
       val pdist = t(s, dir, "embeddings").filter(QuerySet)
         .crossJoin(broadcast(pqCodebook(s, dir)))
         .selectExpr("vec_id as pqid", "ss as pss", "clabel as pcl",
-          s"${sSubDist(s)} as pd2")
+          s"$sSubDist as pd2")
       pqCodes(s, dir).withColumnRenamed("vec_id", "neighbor_id")
         .join(broadcast(cand), Seq("neighbor_id"))
         .join(broadcast(pdist), col("query_id") === col("pqid") &&
@@ -472,7 +439,7 @@ object Similarity {
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("eb"),
         col("sq").as("sb"))
       .join(broadcast(candP), Seq("neighbor_id"))
-      .selectExpr("query_id", "neighbor_id", s"${sCosIn(s)} as cos_sim")
+      .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
     graft.plans.TopKPerKey.topKDesc(rr, Seq("query_id"), "cos_sim",
       Seq("neighbor_id"), TopK)
   }
@@ -508,7 +475,7 @@ object Similarity {
       val scored = cands.crossJoin(broadcast(anchors))
         .filter(col("n_label") =!= col("q_label"))
         .selectExpr("query_id", "q_label", "neighbor_id", "n_label",
-          s"${sCosIn(s)} as cos_sim")
+          s"$sCosIn as cos_sim")
       graft.plans.TopKPerKey.topKDesc(scored, Seq("query_id"), "cos_sim",
           Seq("neighbor_id"), 5)
         .selectExpr("query_id", "q_label", "rk", "neighbor_id", "n_label",
@@ -553,7 +520,7 @@ object Similarity {
           col("sq").as("sa")), "vec_a")
         .join(side.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
           col("sq").as("sb")), "vec_b")
-        .selectExpr("vec_a", "vec_b", s"${sCosIn(s)} as cos_sim")
+        .selectExpr("vec_a", "vec_b", s"$sCosIn as cos_sim")
         .filter("cos_sim >= 0.4")
         .orderBy("vec_a", "vec_b")
     },
@@ -646,12 +613,9 @@ object Similarity {
     "x36_semantic_dedup" -> { (s, dir) =>
       val cent = centroids(s, dir)
       val sq = withSq(s, dir)
-      val dotExpr =
-        if (s.catalog.functionExists("dot_f32f64")) "dot_f32f64(embedding, cv)"
-        else "aggregate(zip_with(embedding, cv, (x, w) -> cast(x as double) * w), cast(0 as double), (acc, t) -> acc + t)"
       val scoredAll = sq.crossJoin(broadcast(cent))
         .selectExpr("vec_id", "embedding", "sq", "clabel",
-          s"$dotExpr / sqrt(sq * csq) as cosc")
+          "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
       // nearest-of-16-centroids assignment as ONE aggregation (min over
       // (-cosc, clabel) structs replays ORDER BY cosc DESC, clabel) —
       // no ranking exchange; embedding/sq are functionally dependent on
@@ -666,7 +630,7 @@ object Similarity {
         .join(members.select(col("vec_id").as("vb"), col("clabel"),
           col("embedding").as("eb"), col("sq").as("sb")), "clabel")
         .filter(col("va") < col("vb"))
-        .selectExpr("va", "vb", s"${sCosIn(s)} as cs")
+        .selectExpr("va", "vb", s"$sCosIn as cs")
         .filter("cs >= 0.4")
       val keeper = pairs.groupBy(col("vb").as("vec_id"))
         .agg(min(col("va")).as("keeper"))
@@ -693,7 +657,7 @@ object Similarity {
         .select(col("vec_id").as("neighbor_id"), col("embedding").as("eb"),
           col("sq").as("sb"))
       val scored = cands.crossJoin(broadcast(probes))
-        .selectExpr("query_id", "neighbor_id", s"${sCosIn(s)} as cos_sim")
+        .selectExpr("query_id", "neighbor_id", s"$sCosIn as cos_sim")
       val nn = graft.plans.TopKPerKey.topKDesc(scored, Seq("query_id"),
         "cos_sim", Seq("neighbor_id"), TopK)
       val votes = nn
@@ -832,7 +796,7 @@ object Similarity {
     "x111_kmeans_silhouette" -> { (s, dir) =>
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       val two = emb.crossJoin(broadcast(km2Cent(s, dir)))
-        .selectExpr("vec_id", "cl", s"${sL2In(s, "embedding", "cv")} as d2")
+        .selectExpr("vec_id", "cl", "l2_f32f64(embedding, cv) as d2")
         .groupBy("vec_id")
         .agg(expr("slice(sort_array(collect_list(struct(d2, cl))), 1, 2)")
           .as("t2"))
@@ -962,13 +926,10 @@ object Similarity {
         .selectExpr("cl2[0] as cell").groupBy("cell")
         .agg(count(lit(1)).as("n_standing"))
       val cent = centroids(s, dir)
-      val dotE =
-        if (s.catalog.functionExists("dot_f32f64")) "dot_f32f64(embedding, cv)"
-        else "aggregate(zip_with(embedding, cv, (x, w) -> cast(x as double) * w), cast(0 as double), (acc, t) -> acc + t)"
       val asg = withSq(s, dir).filter("vec_id % 97 = 0")
         .selectExpr("vec_id + 1000000000 as vec_id", "embedding", "sq")
         .crossJoin(broadcast(cent))
-        .selectExpr("vec_id", "clabel", s"$dotE / sqrt(sq * csq) as cosc")
+        .selectExpr("vec_id", "clabel", "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
         .groupBy("vec_id")
         .agg(expr("min(struct(-cosc as nc, clabel))").as("m"))
         .selectExpr("vec_id", "m.clabel as cell")
@@ -1018,7 +979,7 @@ object Similarity {
             col("sq").as("sa"))), "eval_id")
         .join(sq.select(col("vec_id").as("train_id"),
           col("embedding").as("eb"), col("sq").as("sb")), "train_id")
-        .selectExpr("train_id", "eval_id", s"${sCosIn(s)} as cos_sim")
+        .selectExpr("train_id", "eval_id", s"$sCosIn as cos_sim")
         .filter("cos_sim >= 0.4")
         .groupBy("train_id")
         .agg(count(lit(1)).as("n_eval_near"),
@@ -1247,7 +1208,7 @@ object Similarity {
       val emb = t(s, dir, "embeddings")
       emb.crossJoin(broadcast(labelCentroidArrays(s, dir)))
         .selectExpr("vec_id", "label", "cl",
-          s"${sL2In(s, "embedding", "cv")} as d2")
+          "l2_f32f64(embedding, cv) as d2")
         .groupBy("vec_id", "label")
         .agg(max(expr("case when cl = label then d2 end")).as("down"),
           expr("min(case when cl <> label then struct(d2, cl) end)").as("m"))
@@ -1516,7 +1477,7 @@ object Similarity {
           "vec_a")
         .join(sq.selectExpr("vec_id as vec_b", "embedding as eb", "sq as sb"),
           "vec_b")
-        .selectExpr("vec_a", "vec_b", s"${sCosIn(s)} as cos_sim")
+        .selectExpr("vec_a", "vec_b", s"$sCosIn as cos_sim")
       // each side's usual neighborhood: exact-decimal mean of its K
       // standing out-edge scores (every node has exactly K)
       val deg = nndescentEdges(s, dir, iters = 2)
@@ -1667,7 +1628,7 @@ object Similarity {
     // QUANTIZER CALIBRATION — the gauge behind the round-15 seeding
     // regrade: IVF-routed entries buy recall 4× cheaper per entry on
     // CLUSTERED geometry (x136: 0.5 → 1.0 at E=8) and LOSE to hash
-    // diversity on isotropic vectors (SeedRegrade: 0.2625 → 0.1625 at
+    // diversity on isotropic vectors (SCALE.md re-grade: 0.2625 → 0.1625 at
     // B=10) — so whether the quantizer carries routing signal is a
     // per-corpus MEASUREMENT, not an assumption. Per cell: assigned
     // count, mean top-1 cosine, and mean top1−top2 MARGIN (the routing
@@ -1866,9 +1827,8 @@ object Similarity {
     * depth-2 walk graded @K over a fresh iters-T graph (no shared
     * tiers touched). Returns (recall@K at depth 2, B=10 variant). */
   private[graft] def walkRecallExperiment(s: SparkSession, dir: String,
-      iters: Int, k: Int = GraphK, clustered: Boolean = false,
-      entriesN: Int = 8): String = {
-    val sq = if (clustered) withSqClustered(s, dir) else withSq(s, dir)
+      iters: Int, k: Int = GraphK): String = {
+    val sq = withSq(s, dir)
     val edges = nndescentEdgesOn(s, sq, iters, k).localCheckpoint()
     val udRaw = edges.select("src", "dst").unionByName(
       edges.select(col("dst").as("src"), col("src").as("dst"))).distinct()
@@ -1881,20 +1841,18 @@ object Similarity {
     val nRow = sq.agg(count(lit(1)).as("nc"))
     val entries = probes.select(col("src")).crossJoin(broadcast(nRow))
       .selectExpr("src",
-        s"explode(transform(sequence(1, $entriesN), j -> " +
+        s"explode(transform(sequence(1, 8), j -> " +
           s"${sH("concat(src, ':entry:', j)")} % nc)) as d0", "nc")
       .selectExpr("src",
         "case when d0 = src then (d0 + 1) % nc else d0 end as dst")
       .distinct()
-    // self-contained ground truth (brute-force top-K within THIS
-    // geometry) — grading a clustered walk against the hash-geometry
-    // exact tier would be a category error, and the harness must stay
-    // tier-independent anyway (it builds fresh graphs per (k, T))
+    // self-contained ground truth (brute-force top-K): the harness
+    // stays tier-independent (it builds fresh graphs per (k, T))
     val truth = graft.plans.TopKPerKey.topKDesc(
         sq.selectExpr("vec_id as dst", "embedding as eb", "sq as sb")
           .crossJoin(broadcast(probes))
           .filter(col("dst") =!= col("src"))
-          .selectExpr("src", "dst", s"${sCosIn(s)} as cos"),
+          .selectExpr("src", "dst", s"$sCosIn as cos"),
         Seq("src"), "cos", Seq("dst"), GraphK)
       .select(col("src"), col("dst"), lit(true).as("hit0"))
       .localCheckpoint()
@@ -1926,41 +1884,6 @@ object Similarity {
         "case when d0 = src then (d0 + 1) % nc else d0 end as dst")
       .distinct()
     walkFromTrace(s, sq, ud, probes, entries, hops, b)
-  }
-
-  /** Measurement body for the round-15 seeding re-grade (SCALE.md, the
-    * SeedRegrade main): the x132-shaped width curve over the STANDING
-    * corpus index, run TWICE — hash entries (the retired default) vs
-    * IVF-routed serving entries (the new default) — so the operating
-    * numbers x126/x132 freeze under IVF seeding have their hash
-    * baseline next to them. Hash geometry; the clustered-geometry
-    * A/B is x136/x137's job (slice index, measured recall@10 1.0 at
-    * E=8 for IVF vs 0.5 for hash). */
-  private[graft] def seedRegradeTable(s: SparkSession, dir: String): DataFrame = {
-    val sq = withSq(s, dir)
-    val probes = sq.filter(QuerySet)
-      .selectExpr("vec_id as src", "embedding as ea", "sq as sa")
-    val ud = cappedUd(s, dir, nndescentEdges(s, dir, iters = 2), "nnd_ud")
-    val nRow = sq.agg(count(lit(1)).as("nc"))
-    val hashE = probes.select(col("src")).crossJoin(broadcast(nRow))
-      .selectExpr("src",
-        s"explode(transform(sequence(1, 8), j -> " +
-          s"${sH("concat(src, ':entry:', j)")} % nc)) as d0", "nc")
-      .selectExpr("src",
-        "case when d0 = src then (d0 + 1) % nc else d0 end as dst")
-      .distinct().localCheckpoint()
-    val ivfE = ivfServingEntries(s, dir, probes).localCheckpoint()
-    val legs = for {
-      (seed, entries) <- Seq("hash" -> hashE, "ivf" -> ivfE)
-      b <- Seq(1, 5, 10)
-    } yield gradeWalk(s, dir, walkFrom(s, sq, ud, probes, entries, hops = 2, b = b))
-      .agg(count(lit(1)).as("n_answers"),
-        sum(when(col("hit"), 1L).otherwise(0L)).as("n_hits"))
-      .selectExpr(s"'$seed' as seeding", s"cast($b as bigint) as beam",
-        "n_answers", "n_hits",
-        sRound6("cast(n_hits as double) / cast(n_answers as double)") +
-          " as recall_at_k")
-    legs.reduce(_ unionByName _).orderBy("seeding", "beam")
   }
 
   /** [[beamWalkTrace]] with IVF-ROUTED serving entries — the round-15
@@ -2046,7 +1969,7 @@ object Similarity {
       .join(probes, "src")
       .join(corpus.selectExpr("vec_id as dst", "embedding as eb",
         "sq as sb"), "dst")
-      .selectExpr("src", "dst", s"${sCosIn(s)} as cos")
+      .selectExpr("src", "dst", s"$sCosIn as cos")
     var visited = score(entries).localCheckpoint()
     val trace = scala.collection.mutable.ArrayBuffer(visited)
     // The frontier is NOT checkpointed: it is consumed exactly once
@@ -2116,7 +2039,7 @@ object Similarity {
       .join(probes, "src")
       .join(corpus.selectExpr("vec_id as dst", "embedding as eb",
         "sq as sb"), "dst")
-      .selectExpr("pk", "src", "dst", s"${sCosIn(s)} as cos")
+      .selectExpr("pk", "src", "dst", s"$sCosIn as cos")
     def fold(scored: DataFrame): DataFrame = {
       val ranked = graft.plans.TopKPerKey.topKDesc(scored,
         Seq("pk", "src"), "cos", Seq("dst"), maxB)
@@ -2249,7 +2172,7 @@ object Similarity {
             "sq as sb")
           .crossJoin(broadcast(probes))
           .filter(col("orig_id") =!= col("src"))
-          .selectExpr("src", "dst", s"${sCosIn(s)} as cos_sim"),
+          .selectExpr("src", "dst", s"$sCosIn as cos_sim"),
         Seq("src"), "cos_sim", Seq("dst"), TopK)
       .select(col("src"), col("dst"), col("rk").as("erk"))
       .localCheckpoint()
@@ -2348,7 +2271,7 @@ object Similarity {
               "sq as sb")
             .crossJoin(broadcast(probes))
             .filter(col("orig_id") =!= col("src"))
-            .selectExpr("src", "dst", s"${sCosIn(s)} as cos_sim"),
+            .selectExpr("src", "dst", s"$sCosIn as cos_sim"),
           Seq("src"), "cos_sim", Seq("dst"), TopK)
         .select(col("src"), col("dst"), col("rk").as("erk"))
         .localCheckpoint()
@@ -2409,7 +2332,7 @@ object Similarity {
   }
 
   /** x136's body: the SEEDING lever at a FIXED graph. The round-14
-    * walk-recall study (RecallStudy, SCALE.md) found that on clustered
+    * walk-recall study (SCALE.md) found that on clustered
     * geometry the standing graph fragments into label islands, so
     * recall is ENTRY-limited — uniform hash seeds land in the wrong
     * island and no amount of walking escapes it (E=8→64 lifted
@@ -2506,11 +2429,8 @@ object Similarity {
   private[graft] def quantizerMargin(s: SparkSession, dir: String): DataFrame =
     Durable.tier(s, dir, "quantizer_margin", "v1") {
       val cent = centroids(s, dir)
-      val dotE =
-        if (s.catalog.functionExists("dot_f32f64")) "dot_f32f64(embedding, cv)"
-        else "aggregate(zip_with(embedding, cv, (x, w) -> cast(x as double) * w), cast(0 as double), (acc, t) -> acc + t)"
       withSq(s, dir).crossJoin(broadcast(cent))
-        .selectExpr("vec_id", "clabel", s"$dotE / sqrt(sq * csq) as cosc")
+        .selectExpr("vec_id", "clabel", "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
         .groupBy("vec_id")
         .agg(expr("sort_array(collect_list(struct(-cosc as nc, clabel)))").as("a"))
         .selectExpr("element_at(a, 1).clabel as cell",
@@ -2576,12 +2496,9 @@ object Similarity {
           s"${sH("concat(cell, ':', vec_id)")} as hk"),
         Seq("cell"), "hk", Seq("dst"), 4)
       .select("cell", "dst")
-    val dotE =
-      if (s.catalog.functionExists("dot_f32f64")) "dot_f32f64(ea, cv)"
-      else "aggregate(zip_with(ea, cv, (x, w) -> cast(x as double) * w), cast(0 as double), (acc, t) -> acc + t)"
     val rout = graft.plans.TopKPerKey.topKDesc(
         probes.crossJoin(broadcast(cent))
-          .selectExpr("src", "cl", s"$dotE / sqrt(sa * csq) as cosc"),
+          .selectExpr("src", "cl", "dot_f32f64(ea, cv) / sqrt(sa * csq) as cosc"),
         Seq("src"), "cosc", Seq("cl"), 2)
       .selectExpr("src", "cl as cell")
     rout.join(broadcast(cell4), "cell").select("src", "dst").distinct()
@@ -2606,12 +2523,9 @@ object Similarity {
       .selectExpr("cl", "cv",
         "aggregate(cv, cast(0 as double), (acc, x) -> acc + x * x) as csq")
       .localCheckpoint()
-    def dotE(vec: String) =
-      if (s.catalog.functionExists("dot_f32f64")) s"dot_f32f64($vec, cv)"
-      else s"aggregate(zip_with($vec, cv, (x, w) -> cast(x as double) * w), cast(0 as double), (acc, t) -> acc + t)"
     val asg = s10.select("vec_id", "embedding", "sq")
       .crossJoin(broadcast(cent))
-      .selectExpr("vec_id", "cl", s"${dotE("embedding")} / sqrt(sq * csq) as cosc")
+      .selectExpr("vec_id", "cl", "dot_f32f64(embedding, cv) / sqrt(sq * csq) as cosc")
       .groupBy("vec_id")
       .agg(expr("min(struct(-cosc as nc, cl))").as("m"))
       .selectExpr("vec_id", "m.cl as cell")
@@ -2848,7 +2762,7 @@ object Similarity {
         .selectExpr("embedding as eb", "sq as sb")
       sq.selectExpr("vec_id", "embedding as ea", "sq as sa")
         .crossJoin(broadcast(c))
-        .selectExpr("vec_id", s"1.0d - ${sCosIn(s)} as d")
+        .selectExpr("vec_id", s"1.0d - $sCosIn as d")
     }
     var center = 0L // deterministic seed: the min id
     var mind: DataFrame = null
@@ -2893,7 +2807,7 @@ object Similarity {
     pairs
       .join(corpus.selectExpr("vec_id as src", "embedding as ea", "sq as sa"), "src")
       .join(corpus.selectExpr("vec_id as dst", "embedding as eb", "sq as sb"), "dst")
-      .selectExpr("src", "dst", s"${sCosIn(s)} as cos")
+      .selectExpr("src", "dst", s"$sCosIn as cos")
 
   /** NN-Descent edge lists (src, dst, cos) after `iters` local-join
     * rounds. The canonical 2-round graph is a SHARED tier — it is the

@@ -3,23 +3,11 @@ package graft.pipeline
 import graft.ingest.Ingest
 import graft.model.RootSchema
 import graft.views.Views
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import java.nio.file.{Files, Paths, Path}
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 import scala.util.Using
-
-/** Incremental sync orchestration (SURVEY.md §2.6, §3.1/§3.3).
-  *
-  * The reference polls an HTTP API with a server-issued high-water-mark
-  * cursor persisted after every page (cmd_sync.go:77-187). In the
-  * zero-egress build the document source is a directory of NDJSON files;
-  * the cursor is a lexicographic filename watermark with identical
-  * at-least-once semantics: the cursor advances only after a page's
-  * batch is durably appended, and replays are absorbed by the
-  * latest-version views (Views.latestAllVersions).
-  */
-final case class SyncPage(files: Seq[Path], cursor: String, truncated: Boolean)
 
 /** S4 — cursor persisted as `{stateDir}/last_sync_date.txt`; missing file
   * or force ⇒ full sync from epoch (cmd_sync.go:85-90, 189-206). */
@@ -36,26 +24,16 @@ final class SyncState(stateDir: String) {
   def reset(): Unit = Files.deleteIfExists(file)
 }
 
-/** File-based document source: NDJSON files in `dir`, ordered by name;
-  * `since` is an exclusive filename watermark (the HTTP source S1 would
-  * slot in behind the same pager interface). */
-final class FileDocumentSource(dir: String, pageFiles: Int = 10) {
-  def fetchPage(since: String): SyncPage = {
-    // Using closes the directory stream — the sync loop runs forever, so
-    // an unclosed Files.list leaks a directory handle per poll
-    val all = Using.resource(Files.list(Paths.get(dir))) { st =>
-      st.iterator.asScala
-        .filter(p => p.getFileName.toString.endsWith(".ndjson"))
-        .toVector
-    }.sortBy(_.getFileName.toString)
-      .filter(_.getFileName.toString > since)
-    val page = all.take(pageFiles)
-    SyncPage(page,
-      cursor = page.lastOption.map(_.getFileName.toString).getOrElse(since),
-      truncated = all.size > pageFiles)
-  }
-}
-
+/** Incremental sync orchestration (SURVEY.md §2.6, §3.1/§3.3).
+  *
+  * The reference polls an HTTP API with a server-issued high-water-mark
+  * cursor persisted after every page (cmd_sync.go:77-187). In the
+  * zero-egress build the document source is a directory of NDJSON files;
+  * the cursor is a lexicographic filename watermark with identical
+  * at-least-once semantics: the cursor advances only after a page's
+  * batch is durably appended, and replays are absorbed by the
+  * latest-version views (Views.latestAllVersions).
+  */
 final class SyncPipeline(
     spark: SparkSession,
     sourceDir: String,
@@ -65,64 +43,66 @@ final class SyncPipeline(
     pageFiles: Int = 10) {
 
   val state = new SyncState(stateDir)
-  private val source = new FileDocumentSource(sourceDir, pageFiles)
 
-  /** One sync run: page through new files, append each page's batch,
-    * persist the cursor per page (O2). Returns documents landed. */
-  def syncOnce(force: Boolean = false): Long = {
+  /** One sync run over the file source: NDJSON files in `sourceDir`,
+    * ordered by name, `pageFiles` per page; the cursor is an exclusive
+    * filename watermark. Each page is read by the executors
+    * (`spark.read.textFile`), so file lines never pass through the
+    * driver. Returns documents landed. */
+  def syncOnce(force: Boolean = false): Long = sync(force) { since =>
+    // Using closes the directory stream — the sync loop runs forever, so
+    // an unclosed Files.list leaks a directory handle per poll
+    val all = Using.resource(Files.list(Paths.get(sourceDir))) { st =>
+      st.iterator.asScala
+        .map(_.getFileName.toString)
+        .filter(n => n.endsWith(".ndjson") && n > since)
+        .toVector
+    }.sorted
+    val page = all.take(pageFiles)
+    (Option.when(page.nonEmpty)(
+        spark.read.textFile(page.map(n => Paths.get(sourceDir, n).toString): _*)),
+      page.lastOption.getOrElse(since), all.size > pageFiles)
+  }
+
+  /** One sync run against any paged source (e.g. HttpDocumentSource):
+    * the same loop as the file flow, with the page's NDJSON lines
+    * parallelized for the distributed parse. */
+  def syncFrom(source: PagedSource, force: Boolean = false): Long =
+    sync(force) { since =>
+      import spark.implicits._
+      val page = source.fetchPage(since)
+      (Option.when(page.lines.nonEmpty)(
+          spark.createDataset(page.lines)
+            .repartition(spark.sparkContext.defaultParallelism)),
+        page.cursor, page.truncated)
+    }
+
+  /** The sync loop (O2): fetch a page — (its lines, None when empty;
+    * the cursor to persist after landing it; whether more pages
+    * remain) — parse it, append its batch, persist the cursor. */
+  private def sync(force: Boolean)(
+      fetch: String => (Option[Dataset[String]], String, Boolean)): Long = {
     var cursor = state.read(force)
     var total = 0L
     var more = true
     val batchDate = new Timestamp(System.currentTimeMillis())
     while (more) {
-      val page = source.fetchPage(cursor)
-      if (page.files.isEmpty) more = false
-      else {
+      val (lines, next, truncated) = fetch(cursor)
+      lines.foreach { ds =>
         // persist: count + append would otherwise each re-run the full
         // NDJSON parse + chunk split. Dedup-on-write = the landing PK
         // (K3 semantics): a document delivered twice within this page
         // lands once.
-        val df = Ingest.fromNdjsonLines(
-          spark.read.textFile(page.files.map(_.toString): _*),
-          batchDate, chunkSize).persist()
-        try {
-          val n = df.count()
-          if (n > 0) Ingest.appendBatchDedup(df, landingPath)
-          total += n
-        } finally df.unpersist()
-        cursor = page.cursor
-        state.write(cursor)
-        more = page.truncated
-      }
-    }
-    total
-  }
-
-  /** One sync run against any paged source (e.g. HttpDocumentSource):
-    * identical page/land/persist-cursor loop as the file flow, with the
-    * page's NDJSON lines parallelized for the distributed parse. */
-  def syncFrom(source: PagedSource, force: Boolean = false): Long = {
-    var cursor = state.read(force)
-    var total = 0L
-    var more = true
-    val batchDate = new Timestamp(System.currentTimeMillis())
-    while (more) {
-      val page = source.fetchPage(cursor)
-      if (page.lines.nonEmpty) {
-        import spark.implicits._
-        val df = Ingest.fromNdjsonLines(
-          spark.createDataset(page.lines).repartition(
-            spark.sparkContext.defaultParallelism),
-          batchDate, chunkSize).persist()
+        val df = Ingest.fromNdjsonLines(ds, batchDate, chunkSize).persist()
         try {
           val n = df.count()
           if (n > 0) Ingest.appendBatchDedup(df, landingPath)
           total += n
         } finally df.unpersist()
       }
-      cursor = page.cursor
+      cursor = next
       state.write(cursor)
-      more = page.truncated && page.lines.nonEmpty
+      more = truncated && lines.nonEmpty
     }
     total
   }

@@ -77,10 +77,10 @@ case class CosineF32(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session extension registering graft's native functions; install with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
-  * Queries fall back to the composable HOF form (same numerics) when
-  * the extension is absent, so nothing hard-depends on it. */
+/** Session extension registering graft's native functions, the
+  * TopKPerKey planner strategy and the TopKRewrite optimizer rule.
+  * Required; `EngineSession` installs it (the config is
+  * `spark.sql.extensions=graft.plans.GraftExtensions`). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((

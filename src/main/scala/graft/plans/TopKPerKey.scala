@@ -196,8 +196,9 @@ object TopKPerKey {
   /** Public entry: top `k` rows per `keyCols` by `orderCol` descending,
     * ties broken by `tiebreakCols` ascending (making the order total);
     * adds a 1-based bigint `rk`. Uses the native two-phase operator
-    * when GraftExtensions is installed, the equivalent window form
-    * otherwise — identical output either way. */
+    * (its planner strategy is registered by GraftExtensions), except
+    * for float/double keys, which take the equivalent window form —
+    * identical output either way. */
   def topKDesc(df: DataFrame, keyCols: Seq[String], orderCol: String,
       tiebreakCols: Seq[String], k: Int): DataFrame = {
     require(k > 0, s"top-k requires k > 0, got $k")
@@ -211,8 +212,11 @@ object TopKPerKey {
         f.dataType == org.apache.spark.sql.types.FloatType ||
           f.dataType == org.apache.spark.sql.types.DoubleType)
     }
-    if (!floatKey &&
-        spark.sessionState.planner.extraPlanningStrategies.contains(TopKStrategy)) {
+    if (!floatKey) {
+      require(
+        spark.sessionState.planner.extraPlanningStrategies.contains(TopKStrategy),
+        "topKDesc needs the TopKPerKey planner strategy: build the session " +
+          "with spark.sql.extensions=graft.plans.GraftExtensions (EngineSession does)")
       val analyzed = df.queryExecution.analyzed
       def attr(n: String): Attribute = analyzed.output
         .find(_.name.equalsIgnoreCase(n))

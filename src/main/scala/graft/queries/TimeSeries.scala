@@ -171,8 +171,7 @@ object TimeSeries {
     // NATIVE TOP-K PER KEY: the custom two-phase physical operator
     // (graft.plans.TopKPerKey — partial bounded heaps before the
     // exchange, so the shuffle carries ≤ k × keys × partitions rows
-    // instead of the corpus). Same output as the window form, which is
-    // the automatic fallback when the extension is absent.
+    // instead of the corpus). Same output as the window form.
     "r43_topk_per_key" -> { (s, dir) =>
       graft.plans.TopKPerKey.topKDesc(
         t(s, dir, "events").select("event_type", "event_id", "user_id", "value"),

@@ -283,10 +283,10 @@ object Streaming {
     * the batch x07 pipeline applied at ingest time: each incoming doc
     * computes its 16-seed minhash signature and 4 band hashes MAP-SIDE
     * (the same md5-derived hash family the batch index uses, fused
-    * `minhash16` when the extension is installed) and probes the
-    * standing band index through four broadcast left joins against its
-    * per-bucket min-rep reduction (one row per (band, bucket), so the
-    * joins can never grow the stream) — no stream shuffle, no state.
+    * `minhash16`) and probes the standing band index through four
+    * broadcast left joins against its per-bucket min-rep reduction
+    * (one row per (band, bucket), so the joins can never grow the
+    * stream) — no stream shuffle, no state.
     * Emits `near_candidate` + `dup_hint` (the smallest rep sharing any
     * band). Exact jaccard verification of candidates stays a batch
     * concern, exactly as the batch pipeline verifies x07's candidates
@@ -306,23 +306,14 @@ object Streaming {
     * column. Four broadcast left joins against per-bucket min-rep
     * reductions — no stream shuffle, no state. */
   private def withBandHits(docs: DataFrame, bandIndex: DataFrame): DataFrame = {
-    import graft.llm.Frag._
-    val s = docs.sparkSession
-    val shingleE =
-      if (s.catalog.functionExists("shingles3")) "shingles3(text)"
-      else sLet(sTokens, "tk", sShingles)
-    val sigE =
-      if (s.catalog.functionExists("minhash16")) "minhash16(shs)"
-      else "array(" + (0 until 16).map(i =>
-        s"array_min(transform(shs, sh0 -> ${sDerive(sH("sh0"), i)}))")
-        .mkString(", ") + ")"
+    import graft.llm.Frag.sH
     def bh(b: Int) = sH(s"concat_ws(',', element_at(ms, ${4 * b + 1}), " +
       s"element_at(ms, ${4 * b + 2}), element_at(ms, ${4 * b + 3}), " +
       s"element_at(ms, ${4 * b + 4}))")
     var cur = docs
-      .withColumn("shs", expr(shingleE))
+      .withColumn("shs", expr("shingles3(text)"))
       .withColumn("ms",
-        expr(s"case when size(shs) > 0 then $sigE else null end"))
+        expr("case when size(shs) > 0 then minhash16(shs) else null end"))
     for (b <- 0 until 4) {
       val idx = bandIndex.filter(col("bi") === b)
         .groupBy("bh").agg(min(col("e_of")).as(s"e$b"))

@@ -4,8 +4,18 @@ import org.apache.spark.sql.functions._
 
 class CosineF32Spec extends SparkSpec {
 
-  test("cosine_f32 is registered by GraftExtensions") {
-    assert(spark.catalog.functionExists("cosine_f32"))
+  test("GraftExtensions registers all 13 native functions") {
+    val injected = Seq("cosine_f32", "topk_freq", "minhash16", "simhash60",
+      "shingles3", "hrw_assign", "sign_bands_f32", "dot_f32f64",
+      "l2_f32f64", "charclass_counts", "tokenize_tf", "bloom_bits",
+      "bloom_might_contain")
+    for (f <- injected)
+      assert(spark.catalog.functionExists(f), s"$f is not registered")
+  }
+
+  test("GraftExtensions installs the TopKPerKey planner strategy") {
+    assert(spark.sessionState.planner.extraPlanningStrategies
+      .contains(graft.plans.TopKPerKey.TopKStrategy))
   }
 
   test("native cosine_f32 is bit-equal to the interpreted HOF fold") {

@@ -64,7 +64,9 @@ class PersistentViewsSpec extends SparkSpec {
   private def item(id: String, v: Int, x: Double) =
     s"""{"LISTITEM_ID": "$id", "VAL": $v, "POS": {"X": $x}}"""
 
-  // replay (d1 v1 twice), version argmax (d1 v2 wins), a chunk-split
+  // replay (d1 v1 twice), version argmax (d1 v2 wins), a same-PK exact
+  // replay (d1 v2 twice in one batch: Views.latest's dropDuplicates and
+  // latestFusedSql's ROW_NUMBER must both keep one copy), a chunk-split
   // list (d2: items split across chunks 0 and 1 — the flatten must
   // re-union), a tombstone (d3), and one SRC dimension row
   private val fixture = Seq(
@@ -74,6 +76,8 @@ class PersistentViewsSpec extends SparkSpec {
       data = doc("old", item("A", 1, 0.5))), // at-least-once replay
     rec("2026-01-02 00:00:00", "DOC", "d1", 2,
       data = doc("new", item("B", 2, 1.5))),
+    rec("2026-01-02 00:00:00", "DOC", "d1", 2,
+      data = doc("new", item("B", 2, 1.5))), // same batch_date and PK
     rec("2026-01-01 00:00:00", "DOC", "d2", 1, chunk = 0,
       data = doc("two", item("C", 3, 2.5))),
     rec("2026-01-01 00:00:00", "DOC", "d2", 1, chunk = 1,
@@ -105,8 +109,10 @@ class PersistentViewsSpec extends SparkSpec {
       s"$db.DOC_META_ITEMS_POS", s"$db.SRC"))
   }
 
-  private def rows(df: DataFrame): Set[String] =
-    df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSet
+  // a sorted multiset, so a view that keeps both copies of a same-PK
+  // replay cannot match one that keeps one
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
 
   test("every persistent view matches its DataFrame builder row-for-row") {
     registered // force registration

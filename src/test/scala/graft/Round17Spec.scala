@@ -106,6 +106,18 @@ class Round17Spec extends SparkSpec {
     assert(Integer.bitCount(gateBits(123456L)) == 1, "power of two (m % 64 == 0)")
   }
 
+  test("x119/x109 broadcast bound: GRAFT_GATE_BROADCAST_KEYS parses or names itself") {
+    import graft.llm.Dedup.gateBroadcastKeys
+    assert(gateBroadcastKeys(None) == (1L << 21))
+    assert(gateBroadcastKeys(Some("4096")) == 4096L)
+    assert(gateBroadcastKeys(Some("0")) == 0L)
+    for (bad <- Seq("lots", "-1", "", "2e6")) {
+      val e = intercept[IllegalArgumentException](gateBroadcastKeys(Some(bad)))
+      assert(e.getMessage.contains("GRAFT_GATE_BROADCAST_KEYS") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
   test("x119: fallback bloom gate plan probes map-side (broadcast, no corpus gram shuffle before the gate)") {
     val plan = graft.llm.Dedup.contaminationSpan(spark, dir, native = true,
         broadcastKeys = 0L)

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions.col
   *  - x86's plan stays one narrow map + a single exchange;
   *  - the equality-only shingle consumers (x48/x57/x64) run the FUSED
   *    STRING shingler (shingles3) — hashed keys were measured and
-  *    rejected (graft.ShingleProbe, decision record in
-  *    Frag.sShinglesText), and the fused form must equal the
+  *    rejected (decision record in Frag.sShinglesText), and the fused
+  *    form must equal the
   *    composable HOF chain it replaced.
   */
 class Round20Spec extends SparkSpec {
@@ -53,9 +53,8 @@ class Round20Spec extends SparkSpec {
   }
 
   test("x48/x57/x64 ride the fused string shingler; fused == composable HOF chain") {
-    // the fused kernel must be in the analyzed plans (extensions are
-    // installed in the spec session), and the HOF fallback must be
-    // value-identical so extension-less sessions stay oracle-green
+    // the fused kernel must be in the analyzed plans, and it must be
+    // value-identical to the composable HOF chain it replaced
     for (q <- Seq("x48_source_overlap", "x57_novelty", "x64_dedup_pressure")) {
       val plan = SparkEntry.queries(q)(spark, sf001)
         .queryExecution.analyzed.toString

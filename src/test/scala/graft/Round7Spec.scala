@@ -522,7 +522,7 @@ class Round7Spec extends SparkSpec {
     assert(!p67.contains("CartesianProduct"), p67.take(1500))
     assert(!p67.contains("BroadcastNestedLoopJoin"), p67.take(1500))
     // x75 must route through the native per-key top-k (map-side bounded
-    // heaps), not the window fallback; x76's global ranking must be
+    // heaps), not the window form; x76's global ranking must be
     // rewritten onto it by TopKRewrite
     val p75 = planOf(
       graft.llm.TextAnalysis.queries("x75_source_cap")(spark, sf001))

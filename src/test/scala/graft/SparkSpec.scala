@@ -4,16 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session; specs
-  * run forked per build.sbt). */
+  * run forked per build.sbt). Built by EngineSession, so specs run the
+  * engine confs production runs (GraftExtensions included). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
+    val s = EngineSession.builder("graft-test", "local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
