@@ -135,6 +135,11 @@ object Ingest {
     * for an interchange-friendly landing log). */
   def appendBatch(df: DataFrame, landingPath: String,
       format: String = "parquet"): Unit = {
+    // drop persisted frames over this path BEFORE the write: its
+    // recacheByPath would otherwise refresh their file index in place,
+    // which the registered view catalog shares, so the catalog would go
+    // live mid-snapshot instead of staying as of its createViews
+    graft.queries.Shared.invalidate(landingPath)
     val w = df.write.mode("append").partitionBy("type").format(format)
     // CSV staging mirrors the reference's file-staged loads (Snowflake
     // CSV snowflake.go:131-147, Databricks TSV nullValue='NULL'

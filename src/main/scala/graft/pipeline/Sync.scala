@@ -2,24 +2,30 @@ package graft.pipeline
 
 import graft.ingest.Ingest
 import graft.model.RootSchema
+import graft.queries.Shared
 import graft.views.Views
 import org.apache.spark.sql.{Dataset, SparkSession}
-import java.nio.file.{Files, Paths, Path}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 /** S4 — cursor persisted as `{stateDir}/last_sync_date.txt`; missing file
-  * or force ⇒ full sync from epoch (cmd_sync.go:85-90, 189-206). */
+  * or force ⇒ full sync from epoch (cmd_sync.go:85-90, 189-206). A write
+  * goes to `last_sync_date.txt.tmp` and is renamed over the cursor, so a
+  * crash mid-write leaves the previous cursor (or none), never a
+  * truncated one; a leftover `.tmp` is ignored and overwritten. */
 final class SyncState(stateDir: String) {
   private val file = Paths.get(stateDir, "last_sync_date.txt")
+  private val tmp = Paths.get(stateDir, "last_sync_date.txt.tmp")
   val Epoch = "1900-01-01"
   def read(force: Boolean = false): String =
     if (force || !Files.exists(file)) Epoch
     else Files.readString(file).trim
   def write(cursor: String): Unit = {
     Files.createDirectories(file.getParent)
-    Files.writeString(file, cursor)
+    Files.writeString(tmp, cursor)
+    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE)
   }
   def reset(): Unit = Files.deleteIfExists(file)
 }
@@ -108,11 +114,34 @@ final class SyncPipeline(
   }
 
   /** create_views (§3.2): register the R1/R2 + typed view catalog over
-    * the current landing store. */
+    * the current landing store.
+    *
+    * `_LATEST` is computed once and persisted (MEMORY_AND_DISK), and
+    * `DOCUMENTS_LATEST` and every typed, record and list view read that
+    * one frame, so the landing scan and the `_LATEST` exchange are paid
+    * once per catalog, not once per view. The persist is lazy: this
+    * call only registers names, and the first view read materializes
+    * it. There is one materialization per landing path per session
+    * (keyed in `Shared`, whichever pipeline made it). It is dropped by
+    * the next `createViews` on the path, by any append to it (before
+    * the write) and by `prune()`/`compact()`, so the catalog stays a
+    * snapshot as of this call: an append leaves the registered views
+    * on their old file listing until the next `createViews`.
+    * `_LATEST_ALL_VERSIONS` and `_HISTORY` do not read `_LATEST` and
+    * stay unmaterialized.
+    *
+    * Storage: one executor-side copy of |latest| per refresh, spilled
+    * to disk past executor memory — at 100 TB that is the live
+    * document set, not the version history. */
   def createViews(schema: RootSchema): Seq[String] = {
     val landing = spark.read.schema(graft.ingest.Landing.schema)
       .parquet(landingPath)
-    val latest = Views.latest(landing)
+    // the old materialization must go before the new persist: plans over
+    // one path compare equal whatever their file listing, so persisting
+    // while it is cached would silently reuse the old cache
+    Shared.invalidate(landingPath)
+    val latest = Shared.shared(spark, landingPath, "DOCUMENTS_LATEST")(
+      Views.latest(landing))
     latest.createOrReplaceTempView("DOCUMENTS_LATEST")
     Views.latestAllVersions(landing)
       .createOrReplaceTempView("DOCUMENTS_LATEST_ALL_VERSIONS")
@@ -182,12 +211,14 @@ final class SyncPipeline(
     invalidateCaches()
   }
 
-  // prune/compact replace the files under landingPath in place; any
-  // memoized reader plan pins the OLD file listing and would fail (or
+  // prune/compact replace the files under landingPath outside Spark's
+  // writer; any memoized reader plan, or cached plan (the materialized
+  // _LATEST included), pins the OLD file listing and would fail (or
   // silently serve stale rows) on next use
   private def invalidateCaches(): Unit = {
     graft.queries.Tables.invalidate(landingPath)
-    graft.queries.Shared.invalidate(landingPath)
+    Shared.invalidate(landingPath)
+    spark.catalog.refreshByPath(landingPath)
   }
 
   private def deleteRecursive(p: Path): Unit =

@@ -349,12 +349,14 @@ object Relational {
         .orderBy(col("gid"), asc_nulls_first("l_returnflag"),
           asc_nulls_first("l_linestatus"))
     },
-    // JSON-path extraction from the events props payload
+    // JSON-path extraction from the events props payload, parsed ONCE
+    // per row: json_tuple is a generator, and a filter on a generator's
+    // output cannot be pushed below it, so the k_num predicate reads the
+    // extracted k_str instead of inlining a second parse of props
     "r28_json_path" -> { (s, dir) =>
       t(s, dir, "events")
-        .selectExpr("event_id",
-          "get_json_object(props, '$.k') as k_str",
-          "cast(get_json_object(props, '$.k') as bigint) as k_num")
+        .selectExpr("event_id", "json_tuple(props, 'k') as k_str")
+        .selectExpr("event_id", "k_str", "cast(k_str as bigint) as k_num")
         .filter("k_num % 7 = 0")
         .orderBy("event_id")
     },

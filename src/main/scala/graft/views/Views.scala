@@ -45,20 +45,17 @@ object Views {
       .dropDuplicates("batch_date", "type", "id", "version", "chunk")
   }
 
-  /** R2 — `_LATEST`: of those, keep only the max version per (type,id)
-    * (argmax over the full history, snowflake.go:278-287). Implemented as
-    * a second window on the same (type,id)-prefixed key, so AQE can reuse
-    * the exchange from R1 (both windows shuffle on type,id-prefixed
-    * keys). */
+  /** R2 — `_LATEST`: of R1's rows, keep only the max version per
+    * (type,id) (argmax over the full history, snowflake.go:278-287).
+    * Fused into ONE exchange: the R2 argmax (max version per (type,id))
+    * runs FIRST, so R1's (type,id,version) window and the PK-restoring
+    * dedup both reuse the hash(type,id) partitioning (subset rule —
+    * HashPartitioning(t,i) clusters every (t,i,v) and every PK group).
+    * Value-identical to R1-then-R2: R1 keeps ≥1 row of every landed
+    * version (it only drops stale replays WITHIN a version), so the max
+    * version per (type,id) is the same computed before or after R1, and
+    * same-PK rows are identical replay copies, so dedup order is moot. */
   def latest(landing: DataFrame): DataFrame = {
-    // One exchange, not two: the R2 argmax (max version per (type,id))
-    // runs FIRST, so R1's (type,id,version) window and the PK-restoring
-    // dedup both reuse the hash(type,id) partitioning (subset rule —
-    // HashPartitioning(t,i) clusters every (t,i,v) and every PK group).
-    // Value-identical to R1-then-R2: R1 keeps ≥1 row of every landed
-    // version (it only drops stale replays WITHIN a version), so the max
-    // version per (type,id) is the same computed before or after R1, and
-    // same-PK rows are identical replay copies, so dedup order is moot.
     val wTI = Window.partitionBy("type", "id")
     val wTIV = Window.partitionBy("type", "id", "version")
     landing

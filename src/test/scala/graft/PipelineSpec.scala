@@ -22,6 +22,22 @@ class PipelineSpec extends SparkSpec {
     assert(st.read(force = true) == "1900-01-01")
   }
 
+  test("cursor write is atomic: a leftover .tmp neither breaks read nor survives write") {
+    val dir = tmp("state-tmp"); val st = new SyncState(dir)
+    val leftover = Paths.get(dir, "last_sync_date.txt.tmp")
+    // a crash mid-write before any cursor exists: still a full sync
+    Files.writeString(leftover, "f0")
+    assert(st.read() == "1900-01-01")
+    st.write("f001.ndjson")
+    assert(!Files.exists(leftover))
+    // a crash mid-write after a cursor exists: the old cursor stands
+    Files.writeString(leftover, "f00")
+    assert(st.read() == "f001.ndjson")
+    st.write("f002.ndjson")
+    assert(st.read() == "f002.ndjson")
+    assert(!Files.exists(leftover))
+  }
+
   test("sync pages through files, persists cursor per page, lands all docs (O1/O2)") {
     val src = tmp("src"); val land = tmp("land") + "/landing"; val state = tmp("st")
     writeNdjson(src, "f001.ndjson",
@@ -132,5 +148,113 @@ class PipelineSpec extends SparkSpec {
     p.syncOnce(force = true) // replay: 4 physical rows
     p.prune()
     assert(Tables.t(spark, base, "landing").count() == 2)
+  }
+
+  // ─── the materialized _LATEST behind the view catalog ───
+
+  private val listSchema = graft.model.SchemaCodec.parse(
+    """{"W": {
+      |  "N": {"ACTIVE": true, "TYPE": "TEXT", "NULLABLE": true},
+      |  "L": {"ACTIVE": true, "TYPE": "RECORD LIST", "NULLABLE": true,
+      |    "RECORD_TYPE": {"X": {"ACTIVE": true, "TYPE": "TEXT", "NULLABLE": true}}}
+      |}}""".stripMargin)
+
+  private def wDoc(id: String, v: Int, n: String): String =
+    s"""{"$$TYPE":"W","DOCUMENT_ID":"$id","$$VERSION":$v,"N":"$n",""" +
+      s""""L":[{"LISTITEM_ID":"${id}1","X":"${n}x"}]}"""
+
+  private def rows(view: String): Seq[String] =
+    spark.table(view).collect().map(_.toString).toSeq.sorted
+
+  private def persistedRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("createViews materializes _LATEST once: typed and list views scan it, not parquet") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val src = tmp("src5"); val land = tmp("land5") + "/landing"; val state = tmp("st5")
+    writeNdjson(src, "f001.ndjson", wDoc("a", 1, "a1"), wDoc("a", 2, "a2"),
+      wDoc("b", 1, "b1"))
+    val p = new SyncPipeline(spark, src, land, state)
+    assert(p.clone(listSchema) == 3L)
+    assert(spark.table("DOCUMENTS_LATEST").storageLevel ==
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    assert(spark.table("DOCUMENTS_LATEST").count() == 2L)
+    Seq("W", "W_L").foreach { v =>
+      val df = spark.table(v)
+      assert(df.count() == 2L, v)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      assert(Plans.collect(plan) { case s: InMemoryTableScanExec => s }.nonEmpty,
+        s"$v does not read the materialized _LATEST:\n$plan")
+      assert(Plans.collect(plan) { case s: FileSourceScanExec => s }.isEmpty,
+        s"$v rescans the landing parquet:\n$plan")
+    }
+    assert(rows("W_L") == Seq("[a,a1,a2x]", "[b,b1,b1x]"))
+  }
+
+  test("createViews is lazy and keeps one materialization per landing path") {
+    val src = tmp("src6"); val land = tmp("land6") + "/landing"; val state = tmp("st6")
+    writeNdjson(src, "f001.ndjson", wDoc("a", 1, "a1"), wDoc("b", 1, "b1"))
+    val p1 = new SyncPipeline(spark, src, land, state)
+    val p2 = new SyncPipeline(spark, src, land + "/", state)
+    p1.syncOnce()
+    val before = persistedRdds
+    p1.createViews(listSchema)
+    // registering names runs no job: nothing is cached until a read
+    assert(persistedRdds == before)
+    Seq(p1, p1, p2).zipWithIndex.foreach { case (p, i) =>
+      if (i > 0) p.createViews(listSchema)
+      assert(spark.table("DOCUMENTS_LATEST").count() == 2L)
+      assert(spark.table("W").count() == 2L)
+      assert((persistedRdds -- before).size == 1,
+        s"createViews #${i + 1} left ${(persistedRdds -- before).size} materializations")
+    }
+  }
+
+  test("createViews is a snapshot: a sync drops the materialization, the next createViews sees it") {
+    val src = tmp("src7"); val land = tmp("land7") + "/landing"; val state = tmp("st7")
+    writeNdjson(src, "f001.ndjson", wDoc("a", 1, "a1"), wDoc("b", 1, "b1"))
+    val p = new SyncPipeline(spark, src, land, state)
+    p.clone(listSchema)
+    val (latest0, w0) = (rows("DOCUMENTS_LATEST"), rows("W"))
+    assert(w0.size == 2)
+    val before = persistedRdds
+    writeNdjson(src, "f002.ndjson", wDoc("a", 2, "a2"), wDoc("c", 1, "c1"))
+    assert(p.syncOnce() == 2L)
+    assert(!(before -- persistedRdds).isEmpty, "the append kept the materialization")
+    assert(rows("DOCUMENTS_LATEST") == latest0)
+    assert(rows("W") == w0)
+    p.createViews(listSchema)
+    assert(spark.sql("SELECT DOCUMENT_ID, N FROM W ORDER BY DOCUMENT_ID").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("a", "a2"), ("b", "b1"), ("c", "c1")))
+    assert(rows("DOCUMENTS_LATEST").size == 3)
+  }
+
+  test("createViews after prune() and compact() returns the same latest rows") {
+    val src = tmp("src8"); val land = tmp("land8") + "/landing"; val state = tmp("st8")
+    writeNdjson(src, "f001.ndjson", wDoc("a", 1, "a1"), wDoc("a", 2, "a2"),
+      wDoc("b", 1, "b1"))
+    val p = new SyncPipeline(spark, src, land, state)
+    p.syncOnce()
+    Thread.sleep(5) // distinct batch_date for the replay
+    p.syncOnce(force = true) // full re-sync: every doc lands twice
+    p.createViews(listSchema)
+    val (latest0, w0, l0) = (rows("DOCUMENTS_LATEST"), rows("W"), rows("W_L"))
+    assert(latest0.size == 2)
+    val before = persistedRdds
+    p.prune()
+    assert((persistedRdds -- before).isEmpty && !(before -- persistedRdds).isEmpty,
+      "prune kept the materialization")
+    p.createViews(listSchema)
+    assert(rows("DOCUMENTS_LATEST") == latest0)
+    assert(rows("W") == w0 && rows("W_L") == l0)
+    p.compact(targetFileMB = 128)
+    p.createViews(listSchema)
+    assert(rows("DOCUMENTS_LATEST") == latest0)
+    assert(rows("W") == w0 && rows("W_L") == l0)
   }
 }

@@ -19,6 +19,15 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
+  test("r28_json_path parses props once per row") {
+    val plan = SparkEntry.queries("r28_json_path")(spark, sf001)
+      .queryExecution.optimizedPlan
+    val parses = plan.collect { case n => n.expressions }.flatten
+      .flatMap(_.collect { case e if Set("get_json_object", "json_tuple",
+        "from_json")(e.prettyName) => e.prettyName })
+    assert(parses == Seq("json_tuple"), s"JSON evaluations per row: $parses\n$plan")
+  }
+
   test("entry (flagship) returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
